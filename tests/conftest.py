@@ -1,19 +1,24 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Arrow-Python workers are started by the JVM and import the package
+# through its PYTHONPATH, not through this sys.path.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 from binancedatapipelineinaws_spark.session import get_spark  # noqa: E402
+from binancedatapipelineinaws_spark.tables import TABLE_NAMES  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")
@@ -25,7 +30,7 @@ def spark():
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{SF_ORACLE}/{t}.parquet')"

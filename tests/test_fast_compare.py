@@ -1,13 +1,24 @@
 """Unit tests for the gate's vectorized comparator (tools/check_oracle):
 True must imply classic-repr-path equality; anything uncertain must
-return None so the classic path stays authoritative."""
+return None so the classic path stays authoritative.  Also covers the
+gate's pandas-level dtype and hash verdicts."""
 
 from __future__ import annotations
+
+from datetime import date
 
 import numpy as np
 import pandas as pd
 
-from tools.check_oracle import fast_compare
+from tools.check_oracle import (
+    SAFE_DTYPE_PAIRS,
+    Result,
+    canon,
+    dtype_findings,
+    fast_compare,
+    frames_equal,
+    pandas_verdicts,
+)
 
 
 def test_permutation_invariant():
@@ -82,3 +93,70 @@ def test_mismatch_samples_are_surfaced():
     samples = []
     assert fast_compare(a, a.copy(), samples_out=samples) is True
     assert samples == []
+
+
+# --- pandas-level verdicts: dtype_findings + canon/frames_equal -------------
+
+
+def _verdicts(spark_pdf, duck_pdf):
+    """(dtype verdict passes, hash verdict passes) for one frame pair;
+    either failing fails the id."""
+    res = pandas_verdicts(Result("q", "OK", 1, None), spark_pdf, duck_pdf)
+    dtype_ok = all(safe for *_, safe in res.dtypes)
+    assert res.hash_ok == frames_equal(canon(spark_pdf), canon(duck_pdf))
+    assert res.status == ("OK" if dtype_ok and res.hash_ok else "FAIL")
+    return dtype_ok, res.hash_ok
+
+
+def test_hugeint_float_vs_bigint_fails_both_verdicts():
+    # DuckDB sum(int) is HUGEINT -> pandas float64; Spark bigint -> int64
+    s = pd.DataFrame({"n": np.array([3, 5], dtype="int64")})
+    d = pd.DataFrame({"n": np.array([3.0, 5.0], dtype="float64")})
+    assert dtype_findings(s, d) == [("n", "int64", "float64", False)]
+    assert _verdicts(s, d) == (False, False)
+
+
+def test_null_object_vs_nan_fails_hash():
+    # an all-NULL column: Spark's object column holds None, DuckDB's
+    # lands as float64 NaN
+    s = pd.DataFrame({"v": pd.Series([None, None], dtype=object)})
+    d = pd.DataFrame({"v": [np.nan, np.nan]})
+    assert _verdicts(s, d)[1] is False
+    # within object columns canon maps None and NaN to one sentinel
+    s = pd.DataFrame({"v": pd.Series(["a", None], dtype=object)})
+    d = pd.DataFrame({"v": pd.Series(["a", np.nan], dtype=object)})
+    assert _verdicts(s, d) == (True, True)
+
+
+def test_safe_dtype_pairs_pass():
+    ts = pd.to_datetime(["2024-01-01", "2024-01-02"])
+    days = pd.Series([date(2024, 1, 1), None], dtype=object)
+    pairs = [
+        (np.array([1, 2], dtype="int32"), np.array([1, 2], dtype="int64")),
+        (np.array([1, 2], dtype="int64"), np.array([1, 2], dtype="int32")),
+        (np.array([1, 2], dtype="int8"), np.array([1, 2], dtype="int32")),
+        (ts.astype("datetime64[ns]"), ts.astype("datetime64[us]")),
+        (days, pd.Series([pd.Timestamp("2024-01-01"), pd.NaT]).astype(
+            "datetime64[us]")),
+    ]
+    for a, b in pairs:
+        s, d = pd.DataFrame({"c": a}), pd.DataFrame({"c": b})
+        (finding,) = dtype_findings(s, d)
+        assert finding[3] is True, finding
+        assert _verdicts(s, d) == (True, True), finding
+    assert len(SAFE_DTYPE_PAIRS) == 4  # int32/int64 counts both ways
+
+
+def test_unlisted_dtype_pairs_fail():
+    for a, b in [
+        (np.array([True, False]), np.array([1, 0], dtype="int64")),
+        (np.array([1.5], dtype="float32"), np.array([1.5], dtype="float64")),
+    ]:
+        s, d = pd.DataFrame({"c": a}), pd.DataFrame({"c": b})
+        assert _verdicts(s, d)[0] is False, (a.dtype, b.dtype)
+
+
+def test_string_object_vs_datetime_is_not_a_safe_pair():
+    s = pd.DataFrame({"t": pd.Series(["2024-01-01"], dtype=object)})
+    d = pd.DataFrame({"t": pd.to_datetime(["2024-01-01"]).astype("datetime64[us]")})
+    assert dtype_findings(s, d) == [("t", "object", "datetime64[us]", False)]

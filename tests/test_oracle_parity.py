@@ -1,6 +1,6 @@
 """Replicates the driver's correctness gate: every registered query with
 an oracle must match DuckDB on row count, column names, and
-order-insensitive values at sf0.01 (same compare as
+order-insensitive values at sf0.01 (the value verdict of
 tools/check_oracle.py)."""
 
 from __future__ import annotations
@@ -8,7 +8,8 @@ from __future__ import annotations
 import pytest
 
 from binancedatapipelineinaws_spark.registry import all_specs
-from tools.check_oracle import normalize
+from conftest import SF_ORACLE
+from tools.check_oracle import run_one
 
 SPECS = all_specs()
 
@@ -22,22 +23,6 @@ def test_query_matches_oracle(name, spark, duck):
     # exit so the 316-id serial replica doesn't accumulate cached
     # blocks across the whole session (ADVICE r12 item 3)
     with persist_scope():
-        _run_parity(spec, spark, duck)
-
-
-def _run_parity(spec, spark, duck):
-    sdf = spec.fn(spark, "/root/testdata/sf0.01")
-    srows = [tuple(r) for r in sdf.collect()]
-    if spec.oracle is None:
-        assert len(srows) >= 0  # rows-only check: must run
-        return
-    res = duck.execute(spec.oracle)
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    assert len(srows) == len(orows), f"rowcount {len(srows)} != {len(orows)}"
-    assert sorted(sdf.columns) == sorted(ocols)
-    ns = normalize(srows, sdf.columns)
-    no = normalize(orows, ocols)
-    ndiff = sum(1 for a, b in zip(ns, no) if a != b)
-    sample = [(a, b) for a, b in zip(ns, no) if a != b][:3]
-    assert ns == no, f"{ndiff}/{len(ns)} rows differ; sample {sample}"
+        sdf = spec.fn(spark, SF_ORACLE)
+        status, _, msg = run_one(duck, spec, sdf)
+    assert status in ("OK", "ROWS_ONLY"), msg

@@ -83,54 +83,33 @@ def test_err_then_fixed_pass_is_verified(tmp_path):
 
 
 def test_round_work_fits_driver_window():
-    """The driver checks ~50 queries per round in all_specs() order.
-    The ORACLE-CHANGED `_FORCE_FIRST` queries must open the window
-    (their old rows were computed against a different oracle), every
-    never-verified query must land in the first 50 UNLESS it is
-    explicitly queued in `_DEFER` for the next round, and
-    hash-identical `_PRIORITY` rewrites may be displaced — their
-    existing clean rows remain truthful."""
+    """The driver checks ~50 queries per round in all_specs() order:
+    every never-verified query must land in the first 50."""
     from binancedatapipelineinaws_spark.registry import (
-        _DEFER,
-        _FORCE_FIRST,
         _verified_names,
         all_specs,
     )
 
     order = list(all_specs())
-    assert order[: len(_FORCE_FIRST)] == list(_FORCE_FIRST)
-    first50 = set(order[:50])
     never_verified = set(order) - _verified_names()
-    missing_new = never_verified - first50 - set(_DEFER)
+    missing_new = never_verified - set(order[:50])
     assert not missing_new, missing_new
-    # the oracle-changed prefix must never be displaced from the window
-    assert not (set(_FORCE_FIRST) - first50)
-    # the defer queue must never grow past the next round's slack
-    assert len(_DEFER) <= 14
 
 
 def test_window_budget_not_exceeded():
-    """Forward invariant (r6 verdict #8): (forced re-verifies) +
-    (queries with no clean driver row) must fit one ~50-slot driver
-    window, minus `_DEFER` entries explicitly pushed to the next round.
-    A burst of new registrations past this budget would silently delay
-    verification of OTHER unverified queries — fail at registration
-    time instead."""
+    """Forward invariant (r6 verdict #8): the queries with no clean
+    driver row must fit one ~50-slot driver window.  A burst of new
+    registrations past this budget would silently delay verification
+    of OTHER unverified queries — fail at registration time instead."""
     from binancedatapipelineinaws_spark.registry import (
-        _DEFER,
-        _FORCE_FIRST,
         _verified_names,
         all_specs,
     )
 
-    specs = set(all_specs())
-    unverified = specs - _verified_names()
-    demand = len(set(_FORCE_FIRST) | unverified) - len(
-        set(_DEFER) - _verified_names()
-    )
+    demand = len(set(all_specs()) - _verified_names())
     assert demand <= 50, (
         f"window budget exceeded: {demand} queries need a driver row "
-        "this round; defer the excess via _DEFER"
+        "this round; register fewer new ids"
     )
 
 
@@ -138,22 +117,20 @@ def test_window_is_age_optimal_and_staleness_bounded():
     """Forward invariant (r8 verdict #1/#8): the ~50-slot driver window
     must always land on the STALEST verifications, and no row in the
     cumulative driver record may lag further than one full rotation of
-    the registry (ceil(N/50) + 2 rounds of slack for forced re-verifies
-    and deferred late additions).  A future round that floods new ids
-    or mis-orders the window fails here at registration time, before
-    the round burns its slots."""
+    the registry (ceil(N/50) + 2 rounds of slack).  A future round that
+    floods new ids or mis-orders the window fails here at registration
+    time, before the round burns its slots."""
     import math
 
     from binancedatapipelineinaws_spark import registry
 
     order = list(registry.all_specs())
     vrounds = registry._verified_rounds()
-    pinned = set(registry._FORCE_FIRST) | set(registry._PRIORITY)
     window, tail = order[:50], order[50:]
 
     # age-optimality: every green row left OUT of the window is at
-    # least as fresh as every non-pinned green row IN the window
-    in_ages = [vrounds[n] for n in window if n in vrounds and n not in pinned]
+    # least as fresh as every green row IN the window
+    in_ages = [vrounds[n] for n in window if n in vrounds]
     out_ages = [vrounds[n] for n in tail if n in vrounds]
     if in_ages and out_ages:
         assert max(in_ages) <= min(out_ages), (

@@ -1,8 +1,15 @@
 """Local replica of the driver's correctness gate.
 
-Runs every registered query at sf0.01 on Spark AND its DuckDB oracle,
-then compares row count, column-name set, and an order-insensitive
-value comparison (columns aligned by sorted name, rows sorted).
+Runs every registered query at sf0.01 on Spark AND its DuckDB oracle
+and reports three verdicts per id from one build of the Spark frame:
+
+- values: row count, column-name set, and an order-insensitive value
+  comparison (columns aligned by sorted name, rows sorted);
+- dtypes: every column whose pandas dtype differs between Spark
+  ``toPandas()`` and DuckDB ``.df()``; a pair outside
+  ``SAFE_DTYPE_PAIRS`` fails the run;
+- pandas hash: the driver's canonicalize-and-hash compare on that same
+  pair of pandas frames.
 
 Usage:
     python tools/check_oracle.py            # all queries
@@ -12,22 +19,31 @@ Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import date, datetime
+from typing import NamedTuple, Optional
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-
-import os  # noqa: E402
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # Overridable so the sweep can run against other corpora — e.g. the
 # synthetic .bench_sf1 dataset as a testdata-regeneration robustness
 # drill (different value ranges, tie patterns, and row counts).
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+
+
+class Result(NamedTuple):
+    name: str
+    status: str  # OK / ROWS_ONLY / SKIP / FAIL / ERROR, all verdicts folded
+    nrows: int
+    msg: Optional[str]
+    # (column, spark dtype, duck dtype, safe) per differing column;
+    # None when the pandas verdicts did not run (value verdict not OK)
+    dtypes: Optional[list] = None
+    hash_ok: Optional[bool] = None
 
 
 def norm_cell(v):
@@ -147,19 +163,11 @@ def fast_compare(spdf, oddf, samples_out=None):
 FAST_FAIL_READJUDICATE_MAX = 5_000_000
 
 
-def run_one_fast(spark, con, name, spec):
-    """Arrow/vectorized variant of run_one for big-corpus sweeps.
-    Returns None when the classic path must decide (no oracle,
-    complex/unsupported dtypes, or a sub-threshold mismatch)."""
-    sdf = spec.fn(spark, SF_DIR)
-    if spec.oracle is None or any(
-        f.dataType.typeName() in ("array", "map", "struct")
-        for f in sdf.schema.fields
-    ):
-        return None
-    spdf = sdf.toPandas()
-    ores = con.execute(spec.oracle)
-    oddf = ores.df()
+def run_one_fast(spdf, oddf):
+    """Arrow/vectorized value verdict for big-corpus sweeps, on the
+    ``toPandas()`` / ``.df()`` frame pair.  Returns None when the
+    classic path must decide (unsupported dtypes or a sub-threshold
+    mismatch)."""
     problems = []
     if len(spdf) != len(oddf):
         problems.append(f"rowcount spark={len(spdf)} oracle={len(oddf)}")
@@ -183,17 +191,22 @@ def run_one_fast(spark, con, name, spec):
     return None  # classic path decides (and prints samples)
 
 
-def run_one(spark, con, name, spec, verbose=False):
-    sdf = spec.fn(spark, SF_DIR)
-    # Driver-compat guard: the driver canonicalizes with pandas
-    # sort_values, which cannot hash array/map/struct cells (this ERR'd
-    # three queries in round 1). Any complex-typed output column is a
-    # hard failure here even though this script's own compare handles it.
-    complex_cols = [
+def _complex_cols(sdf):
+    return [
         f.name
         for f in sdf.schema.fields
         if f.dataType.typeName() in ("array", "map", "struct")
     ]
+
+
+def run_one(con, spec, sdf, verbose=False):
+    """Value verdict of the built Spark frame ``sdf`` against the
+    oracle: (status, nrows, msg)."""
+    # Driver-compat guard: the driver canonicalizes with pandas
+    # sort_values, which cannot hash array/map/struct cells (this ERR'd
+    # three queries in round 1). Any complex-typed output column is a
+    # hard failure here even though this script's own compare handles it.
+    complex_cols = _complex_cols(sdf)
     if complex_cols:
         return (
             "FAIL",
@@ -234,6 +247,129 @@ def run_one(spark, con, name, spec, verbose=False):
     if problems:
         return ("FAIL", len(srows), "; ".join(problems))
     return ("OK", len(srows), None)
+
+
+# --- pandas-level verdicts ---------------------------------------------------
+# The driver converts BOTH engines' results to pandas before sorting and
+# hashing, so a value-equal result can still hash-fail it: DuckDB
+# sum(int) is HUGEINT -> float64 while Spark's bigint is int64 (r02-r04
+# lost 8 green rows to exactly this).  These are the only differing
+# dtype pairs the gate accepts, unordered; each has clean driver rows.
+SAFE_DTYPE_PAIRS = frozenset(
+    frozenset(pair)
+    for pair in (
+        ("datetime64[ns]", "datetime64[us]"),
+        ("int32", "int64"),
+        ("int8", "int32"),  # DuckDB narrows small-range integers
+        # only when every non-null object cell is a date (_date_cells)
+        ("object", "datetime64[us]"),
+    )
+)
+
+
+def _date_cells(s) -> bool:
+    """True for a non-empty object column of datetime.date cells (and
+    nulls) — the driver hashes these equal to datetime64 (q_fn_cast /
+    q_fn_datetime passed r01 with exactly this pairing)."""
+    return bool(len(s)) and bool(
+        s.map(lambda v: v is None or hasattr(v, "toordinal")).all()
+    )
+
+
+def dtype_findings(spdf, oddf):
+    """(column, spark dtype, duck dtype, safe) for every column whose
+    pandas dtype differs; ``safe`` means the pair is in
+    SAFE_DTYPE_PAIRS."""
+    scols = {c: str(d) for c, d in zip(spdf.columns, spdf.dtypes)}
+    dcols = {c: str(d) for c, d in zip(oddf.columns, oddf.dtypes)}
+    out = []
+    for c in sorted(set(scols) | set(dcols)):
+        s, d = scols.get(c, "<missing>"), dcols.get(c, "<missing>")
+        if s == d:
+            continue
+        safe = frozenset((s, d)) in SAFE_DTYPE_PAIRS
+        if safe and "object" in (s, d):
+            safe = _date_cells(spdf[c] if s == "object" else oddf[c])
+        out.append((c, s, d, safe))
+    return out
+
+
+def canon(pdf):
+    """Driver-style canonical form: columns sorted by name, rows sorted
+    by all columns, index dropped.  Numeric/datetime columns are
+    widened to one common representation per family so the compare
+    tests VALUES (the driver's empirically-safe pairs: int32-vs-int64,
+    datetime64[ns]-vs-[us]) while int-vs-float stays a mismatch."""
+    import numpy as np
+    import pandas as pd
+
+    out = {}
+    for c in sorted(pdf.columns):
+        s = pdf[c]
+        if pd.api.types.is_bool_dtype(s):
+            out[c] = s.astype("int64")
+        elif pd.api.types.is_integer_dtype(s):
+            out[c] = s.astype("int64")
+        elif pd.api.types.is_float_dtype(s):
+            out[c] = s.astype("float64")
+        elif pd.api.types.is_datetime64_any_dtype(s):
+            out[c] = s.astype("datetime64[ns]")
+        elif _date_cells(s):
+            # align object dates to the datetime64 family
+            out[c] = pd.to_datetime(s).astype("datetime64[ns]")
+        else:
+            # object: normalize None/NaN to a sentinel, rest to str
+            out[c] = s.map(
+                lambda v: "<NULL>" if v is None or (isinstance(v, float) and np.isnan(v)) else str(v)
+            )
+    res = pd.DataFrame(out)
+    if len(res):
+        res = res.sort_values(by=list(res.columns), kind="mergesort").reset_index(
+            drop=True
+        )
+    return res
+
+
+def frames_equal(a, b) -> bool:
+    import numpy as np
+    import pandas as pd
+
+    if list(a.columns) != list(b.columns) or len(a) != len(b):
+        return False
+    for c in a.columns:
+        x, y = a[c], b[c]
+        if pd.api.types.is_float_dtype(x) and pd.api.types.is_float_dtype(y):
+            if not np.array_equal(x.to_numpy(), y.to_numpy(), equal_nan=True):
+                return False
+        else:
+            if x.dtype != y.dtype or not x.equals(y):
+                return False
+    return True
+
+
+def pandas_verdicts(res: Result, spdf, oddf) -> Result:
+    """Fold the dtype and pandas-hash verdicts of one ``toPandas()`` /
+    ``.df()`` frame pair into a value-OK result."""
+    dtypes = dtype_findings(spdf, oddf)
+    notes = [
+        f"dtype {c}: spark={s} duck={d} ({'safe' if safe else 'UNSAFE'})"
+        for c, s, d, safe in dtypes
+    ]
+    a, b = canon(spdf), canon(oddf)
+    hash_ok = frames_equal(a, b)
+    if not hash_ok:
+        cols = [
+            c for c in a.columns
+            if c in b.columns and not frames_equal(a[[c]], b[[c]])
+        ]
+        notes.append(f"pandas-hash mismatch in columns {cols}")
+    failed = not hash_ok or not all(safe for *_, safe in dtypes)
+    return res._replace(
+        status="FAIL" if failed else res.status,
+        msg="; ".join(notes) or None,
+        dtypes=dtypes,
+        hash_ok=hash_ok,
+    )
 
 
 # Queries whose Spark path switches to an approximate-recall candidate
@@ -281,10 +417,7 @@ def _recall_fixture(n_rows: int):
         return _FIXTURE_CACHE[key]
     import json
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "tests", "fixtures", f"recall_gt_{n_rows}.json",
-    )
+    path = os.path.join(REPO, "tests", "fixtures", f"recall_gt_{n_rows}.json")
     fx = None
     if os.path.exists(path):
         with open(path) as f:
@@ -310,11 +443,9 @@ def _fx_cell(v):
     return ("v", str(v))
 
 
-def _fixture_check(spark, name, spec, fx):
+def _fixture_check(df, entry):
     """Compare the live Spark result against the fixture's expected
     rows (columns aligned by the fixture's order, rows sorted)."""
-    entry = fx[name]
-    df = spec.fn(spark, SF_DIR)
     cols = list(df.columns)
     if sorted(cols) != sorted(entry["columns"]):
         return (
@@ -340,9 +471,47 @@ def _fixture_check(spark, name, spec, fx):
     )
 
 
+def check_one(spark, con, spec, fast=False, verbose=False) -> Result:
+    """Every verdict for one id, from one build of its Spark frame."""
+    name = spec.name
+    rung = APPROX_RECALL_ABOVE.get(name)
+    fx = None
+    if rung is not None and (n_corpus := _corpus_rows(con, rung[0])) > rung[1]:
+        fx = _recall_fixture(n_corpus)
+        if fx is None or name not in fx:
+            return Result(
+                name,
+                "SKIP",
+                -1,
+                f"corpus {rung[0]} exceeds exact-path rung "
+                f"({rung[1]} rows) and no ground-truth fixture "
+                "matches this corpus: Spark uses approx-recall "
+                "candidates, oracle is exact — compare not "
+                "meaningful at this size",
+            )
+    sdf = spec.fn(spark, SF_DIR)
+    if fx is not None:
+        return Result(name, *_fixture_check(sdf, fx[name]))
+    frames = res = None
+    if fast and spec.oracle is not None and not _complex_cols(sdf):
+        # vectorized Arrow path; a None result (unsupported dtypes or a
+        # sub-threshold mismatch) falls through to the authoritative
+        # classic path
+        frames = (sdf.toPandas(), con.execute(spec.oracle).df())
+        res = run_one_fast(*frames)
+    if res is None:
+        res = run_one(con, spec, sdf, verbose=verbose)
+    if res[0] != "OK":
+        return Result(name, *res)
+    if frames is None:
+        frames = (sdf.toPandas(), con.execute(spec.oracle).df())
+    return pandas_verdicts(Result(name, *res), *frames)
+
+
 def main():
     from binancedatapipelineinaws_spark.registry import all_specs
-    from binancedatapipelineinaws_spark.session import get_spark
+    from binancedatapipelineinaws_spark.session import get_spark, persist_scope
+    from binancedatapipelineinaws_spark.tables import TABLE_NAMES
 
     args = sys.argv[1:]
     threads = 1
@@ -358,6 +527,11 @@ def main():
     if only:
         specs = {k: v for k, v in specs.items() if k in only}
 
+    # Arrow-Python workers are started by the JVM and import the
+    # package through its PYTHONPATH, not through this sys.path.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
     # Serial mode replicates the driver exactly; --threads N overlaps
     # independent queries on the shared SparkContext (concurrent actions
     # are a supported Spark pattern; each worker gets its own DuckDB
@@ -392,7 +566,7 @@ def main():
         # 32 default threads also oversubscribes the host 3-4x — a
         # query that fits its budget solo can blow it in a sweep
         c.execute(f"SET threads TO {max(4, 32 // threads)}")
-        for t in TABLES:
+        for t in TABLE_NAMES:
             c.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet"
                 # Spark-written tables are DIRECTORIES of part files
@@ -401,67 +575,20 @@ def main():
         return c
 
     def check(name):
-        rung = APPROX_RECALL_ABOVE.get(name)
         cur = duck_connect()
         try:
-            if rung is not None and (
-                n_corpus := _corpus_rows(cur, rung[0])
-            ) > rung[1]:
-                fx = _recall_fixture(n_corpus)
-                if fx is not None and name in fx:
-                    try:
-                        status, nrows, msg = _fixture_check(
-                            spark, name, specs[name], fx
-                        )
-                    except Exception as e:  # noqa: BLE001
-                        status, nrows, msg = (
-                            "ERROR", -1,
-                            f"{type(e).__name__}: {str(e)[:300]}",
-                        )
-                    return (name, status, nrows, msg)
-                return (
-                    name,
-                    "SKIP",
-                    -1,
-                    f"corpus {rung[0]} exceeds exact-path rung "
-                    f"({rung[1]} rows) and no ground-truth fixture "
-                    "matches this corpus: Spark uses approx-recall "
-                    "candidates, oracle is exact — compare not "
-                    "meaningful at this size",
+            # persist_scope (session.py, ADVICE r12 item 3): every frame
+            # the builder scoped_persist()-ed is unpersisted when this
+            # id's verdicts are in, so a 30-id sweep chunk in one
+            # session cannot accumulate cached blocks.  Thread-local,
+            # so the 4-way pool can't release a sibling id's in-flight
+            # cache.
+            with persist_scope():
+                return check_one(
+                    spark, cur, specs[name], fast=fast, verbose=(threads == 1)
                 )
-            try:
-                # persist_scope (session.py, ADVICE r12 item 3): every
-                # frame the builder scoped_persist()-ed is unpersisted
-                # when this id's compare completes, so a 30-id sweep
-                # chunk in one session cannot accumulate cached blocks.
-                # Thread-local, so the 4-way pool can't release a
-                # sibling id's in-flight cache.
-                from binancedatapipelineinaws_spark.session import (
-                    persist_scope,
-                )
-
-                res = None
-                with persist_scope():
-                    if fast:
-                        # vectorized Arrow path; a None result (no
-                        # oracle, unsupported dtypes, or a
-                        # sub-threshold mismatch) falls through to the
-                        # authoritative classic path
-                        res = run_one_fast(spark, cur, name, specs[name])
-                    if res is not None:
-                        status, nrows, msg = res
-                    else:
-                        status, nrows, msg = run_one(
-                            spark, cur, name, specs[name],
-                            verbose=(threads == 1),
-                        )
-            except Exception as e:  # noqa: BLE001
-                status, nrows, msg = (
-                    "ERROR",
-                    -1,
-                    f"{type(e).__name__}: {str(e)[:300]}",
-                )
-            return (name, status, nrows, msg)
+        except Exception as e:  # noqa: BLE001
+            return Result(name, "ERROR", -1, f"{type(e).__name__}: {str(e)[:300]}")
         finally:
             cur.close()
 
@@ -483,25 +610,41 @@ def main():
             for fut in as_completed(futs):
                 res = fut.result()
                 _print_result(res)
-                done[res[0]] = res
+                done[res.name] = res
         results = [done[n] for n in names]
 
-    n_ok = sum(1 for r in results if r[1] in ("OK", "ROWS_ONLY"))
-    n_skip = sum(1 for r in results if r[1] == "SKIP")
+    n_ok = sum(1 for r in results if r.status in ("OK", "ROWS_ONLY"))
+    n_skip = sum(1 for r in results if r.status == "SKIP")
     n_fail = len(results) - n_ok - n_skip
     print(
         f"\n{n_ok} ok, {n_fail} failing"
         + (f", {n_skip} skipped (approx-recall rung)" if n_skip else "")
     )
+    # the pandas verdicts run on every id whose value verdict passed
+    typed = [r for r in results if r.dtypes is not None]
+    n_clean = sum(1 for r in typed if not r.dtypes)
+    safe_only = [
+        r for r in typed if r.dtypes and all(safe for *_, safe in r.dtypes)
+    ]
+    n_safe_cols = sum(len(r.dtypes) for r in safe_only)
+    n_hash_ok = sum(1 for r in typed if r.hash_ok)
+    print(
+        f"dtypes: {n_clean} clean, {len(safe_only)} safe pairs only "
+        f"({n_safe_cols} columns), "
+        f"{len(typed) - n_clean - len(safe_only)} with an unsafe pair"
+    )
+    print(f"pandas hash: {n_hash_ok} ok, {len(typed) - n_hash_ok} failing")
     sys.exit(1 if n_fail else 0)
 
 
 def _print_result(res):
-    name, status, nrows, msg = res
     tag = {"OK": "ok", "ROWS_ONLY": "ok(rows-only)", "SKIP": "SKIP"}.get(
-        status, status
+        res.status, res.status
     )
-    print(f"{name:28s} {tag:14s} rows={nrows}" + (f"  {msg}" if msg else ""))
+    print(
+        f"{res.name:28s} {tag:14s} rows={res.nrows}"
+        + (f"  {res.msg}" if res.msg else "")
+    )
 
 
 if __name__ == "__main__":
